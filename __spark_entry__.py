@@ -132,8 +132,7 @@ def _q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_event_id"),
     )
     return asof_join(probe, clicks, on="user_id", probe_ts="ts",
-                     data_ts="ts", strategy="merge",
-                     tolerance_seconds=3600)
+                     data_ts="ts", tolerance_seconds=3600)
 
 
 # The as-of match is the LATEST row <= ts, so "within tolerance" is just
@@ -185,7 +184,7 @@ def _q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("_rn = 1").drop("_rn")
     return asof_join(
         probe, clicks, on="user_id", probe_ts="ts", data_ts="ts",
-        strategy="salted", target_rows_per_key=200, n_chunks=8,
+        strategy="salted", target_rows_per_key=200,
     )
 
 
@@ -1974,7 +1973,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "asof_join_union": _q_asof("union"),
         "asof_join_broadcast": _q_asof("broadcast"),
-        "asof_join_merge": _q_asof("merge"),
         "asof_join_strict": _q_asof_strict,
         "asof_join_tolerance_1h": _q_asof_tolerance,
         "asof_join_salted": _q_asof_salted,
@@ -2029,7 +2027,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         "asof_join_union": _ASOF_ORACLE,
         "asof_join_broadcast": _ASOF_ORACLE,
-        "asof_join_merge": _ASOF_ORACLE,
         "asof_join_strict": _ASOF_STRICT_ORACLE,
         "asof_join_tolerance_1h": _ASOF_TOL_ORACLE,
         "asof_join_salted": _ASOF_SALTED_ORACLE,

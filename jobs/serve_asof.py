@@ -2,7 +2,7 @@
 
     spark-submit --py-files sptag_spark.zip jobs/serve_asof.py \
         --features /data/features/data --probes /data/probes.parquet \
-        --out /data/served [--strategy union|broadcast|merge]
+        --out /data/served [--strategy union|broadcast|salted]
 
 Joins a probe frame (doc_id, asof_ts) against the feature table, returning
 per probe the latest feature row with ts <= asof_ts (zero temporal
@@ -24,7 +24,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--probes", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--strategy", default="union",
-                    choices=["union", "broadcast", "merge", "salted"])
+                    choices=["union", "broadcast", "salted"])
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession

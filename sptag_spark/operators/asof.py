@@ -14,7 +14,7 @@ visible only if its stored version is current — our ts <= asof_ts filter is
 the same zero-temporal-leakage guard, declared relationally).
 
 Three physical strategies, chosen like SPTAG chooses head-routing vs full
-broadcast (AggregatorService.cpp:175-226):
+broadcast (AggregatorService.cpp:175-226), all JVM-side:
 
 - ``union`` (default, scales to 10^12 rows): tag probe/data, unionByName,
   one shuffle on the keys, per-key sort, a single running
@@ -25,31 +25,40 @@ broadcast (AggregatorService.cpp:175-226):
   payload columns come from the SAME matched row (per-column last() could
   mix rows when a payload value is genuinely null).
 
-- ``broadcast``: when the probe side is small (a feature-lookup batch),
-  broadcast it, range-join against the data scan (ts <= asof_ts evaluated
-  scan-side), then window top-1 per probe row. The big side never shuffles.
+- ``salted``: the union plan with hot keys' timelines split into ts
+  chunks across reducers, plus a tiny carry frame between chunks.
 
-- ``merge`` (vectorized Arrow path): cogrouped applyInPandas running
-  pandas.merge_asof per key bucket — numpy searchsorted, one Arrow batch
-  per group. Wins when the payload is very wide or when per-group logic
-  (tolerance, nearest-rather-than-backward) is needed.
+- ``broadcast`` (hash join): a LEFT OUTER equi-join on the keys with
+  ts <= asof_ts as the join condition, then a top-1 window per probe
+  row. Spark can only hash-build the null-supplying (data) side of a
+  left outer join: it runs ``BroadcastHashJoin LeftOuter, BuildRight``
+  when the data side fits under autoBroadcastJoinThreshold and a
+  sort-merge join (data shuffled) otherwise. The window shuffles only
+  the join output, so small probe batches stay cheap.
 
-All strategies produce identical results (tested against each other and a
-DuckDB ASOF JOIN oracle).
+``auto`` routes to ``broadcast`` when the probe side's plan statistics
+fit under autoBroadcastJoinThreshold, else to ``union``.
+
+``tolerance_seconds`` is applied once, after whichever plan ran: a match
+older than the tolerance is nulled out. The match is the latest row
+<= asof_ts, so when it is too old every other candidate is too.
+
+Data rows with a NULL join key or NULL ts never match (equality and
+``ts <= asof_ts`` are never true for NULL). All strategies produce
+identical results (tested against each other and a DuckDB ASOF JOIN
+oracle).
 """
 
 from __future__ import annotations
 
+import math
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import TimestampNTZType, TimestampType
+
+from sptag_spark.session import shuffle_parts
 
 _PROBE_TAG = "__asof_is_probe"
 _TS = "__asof_ts"
@@ -69,21 +78,23 @@ def asof_join(
     strategy: str = "union",
     tolerance_seconds: float | None = None,
     target_rows_per_key: int = 1_000_000,
-    n_chunks: int = 32,
 ) -> DataFrame:
     """As-of join ``probe`` against ``data``.
 
     Returns all probe columns plus ``matched_ts`` plus each payload column
-    (null when no data row qualifies). ``payload`` defaults to every data
+    (null when no data row qualifies, or when the match is more than
+    ``tolerance_seconds`` older than the probe; numeric ts columns take
+    the tolerance in their own units). ``payload`` defaults to every data
     column except the join keys and ``data_ts``.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    # A data row with NULL ts can never qualify (`ts <= asof_ts` is never
-    # true for NULL in SQL); filtering here makes all four strategies
-    # agree — the union window's nulls-first ordering would otherwise
-    # silently hand a null-ts payload to later probes, and merge_asof
-    # cannot sort NaT keys at all.
-    data = data.filter(F.col(data_ts).isNotNull())
+    # A data row with a NULL ts or key can never qualify (`ts <= asof_ts`
+    # and `key = key` are never true for NULL in SQL); filtering here
+    # makes all strategies agree — the union window would otherwise hand
+    # a null-ts payload to later probes (nulls sort first) and match NULL
+    # probe keys to NULL data keys (one window partition).
+    for c in (data_ts, *keys):
+        data = data.filter(F.col(c).isNotNull())
     if payload is None:
         payload = [c for c in data.columns if c not in keys and c != data_ts]
     payload = list(payload)
@@ -100,38 +111,50 @@ def asof_join(
         # union plan. Plan-statistics based — no extra job.
         probe_bytes = probe._jdf.queryExecution().optimizedPlan() \
             .stats().sizeInBytes()
-        raw = probe.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-        try:
-            threshold = int(str(raw).lower().rstrip("b"))
-        except ValueError:  # unit-suffixed form like "10m" — stay safe
-            threshold = 10 * 1024 * 1024
+        # Spark's own parsed value: the raw conf string may carry a unit
+        # suffix ("64MB", "1KB").
+        threshold = probe.sparkSession._jsparkSession.sessionState() \
+            .conf().autoBroadcastJoinThreshold()
         strategy = "broadcast" if (
             0 <= probe_bytes <= max(threshold, 0)
         ) else "union"
-        if tolerance_seconds is not None:
-            strategy = "broadcast" if strategy == "broadcast" else "merge"
     if strategy == "union":
-        if tolerance_seconds is not None:
-            raise ValueError("tolerance requires strategy='broadcast' or 'merge'")
-        return _asof_union(probe, data, keys, probe_ts, data_ts, payload, strict)
-    if strategy == "salted":
-        if tolerance_seconds is not None:
-            raise ValueError("tolerance requires strategy='broadcast' or 'merge'")
-        return _asof_union_salted(
+        out = _asof_union(probe, data, keys, probe_ts, data_ts, payload, strict)
+    elif strategy == "salted":
+        out = _asof_union_salted(
             probe, data, keys, probe_ts, data_ts, payload, strict,
-            target_rows_per_key=target_rows_per_key, n_chunks=n_chunks,
+            target_rows_per_key=target_rows_per_key,
         )
-    if strategy == "broadcast":
-        return _asof_broadcast(
-            probe, data, keys, probe_ts, data_ts, payload, strict, tolerance_seconds
+    elif strategy == "broadcast":
+        out = _asof_broadcast(
+            probe, data, keys, probe_ts, data_ts, payload, strict
         )
-    if strategy == "merge":
-        return _asof_merge(
-            probe, data, keys, probe_ts, data_ts, payload, strict, tolerance_seconds
-        )
-    raise ValueError(f"unknown asof strategy: {strategy}")
+    else:
+        raise ValueError(f"unknown asof strategy: {strategy}")
+    if tolerance_seconds is None:
+        return out
+    return _within_tolerance(
+        out, probe_ts, probe.schema[probe_ts].dataType,
+        data.schema[data_ts].dataType, payload, tolerance_seconds,
+    )
+
+
+def _within_tolerance(out: DataFrame, probe_ts: str, probe_type, data_type,
+                      payload: list[str], tolerance_seconds: float) -> DataFrame:
+    """Null out ``matched_ts`` and the payload where the match is more
+    than ``tolerance_seconds`` older than the probe. A tolerance of 0 is a
+    real bound: it keeps exact-timestamp matches only."""
+    age = _ts_ordinal(F.col(probe_ts), probe_type) \
+        - _ts_ordinal(F.col("matched_ts"), data_type)
+    # _ts_ordinal is unix micros for timestamps, raw units for numbers
+    scale = 1_000_000 if isinstance(
+        probe_type, (TimestampType, TimestampNTZType)) else 1
+    fresh = age <= F.lit(tolerance_seconds * scale)
+    nulled = {"matched_ts", *payload}
+    return out.select(*[
+        F.when(fresh, F.col(c)).alias(c) if c in nulled else F.col(c)
+        for c in out.columns
+    ])
 
 
 def _pay_struct(data: DataFrame, data_ts: str, payload: list[str]):
@@ -220,8 +243,43 @@ def _ts_ordinal(col: Column, dtype) -> Column:
     return col.cast("double")
 
 
+def _hot_sample(unioned: DataFrame, sample_mod: int) -> DataFrame:
+    """The deterministic 1/sample_mod row sample the hot-key stats read.
+
+    Hash-based (not rand()): stable under task retries. Hash ALL columns,
+    not just (keys, ts): with (keys, ts) alone every row sharing a
+    timestamp samples all-or-nothing, and a hot key with few DISTINCT
+    timestamps (coarse ts, heavy duplication) evades detection with
+    non-trivial probability — e.g. 100 distinct ts at 1/64 each ->
+    (63/64)^100 ~ 21% miss. Payload columns break the correlation for
+    all but byte-identical duplicate rows. MapType has no hash in Spark
+    (even nested inside a struct or array) — exclude unhashable payload
+    columns (keys+ts are always hashable, so the sample stays
+    well-defined; only the duplicate-row correlation guard weakens for
+    rows identical in every hashable column)."""
+    if sample_mod == 1:
+        return unioned
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    def _has_map(dt) -> bool:
+        if isinstance(dt, MapType):
+            return True
+        if isinstance(dt, ArrayType):
+            return _has_map(dt.elementType)
+        if isinstance(dt, StructType):
+            return any(_has_map(f.dataType) for f in dt.fields)
+        return False
+
+    hashable = [f.name for f in unioned.schema.fields
+                if not _has_map(f.dataType)]
+    return unioned.filter(F.pmod(
+        F.xxhash64(*[F.col(c) for c in hashable], F.lit("hotstats")),
+        F.lit(sample_mod),
+    ) == 0)
+
+
 def _hot_bounds(unioned: DataFrame, keys: list[str], ord_col: Column,
-                target_rows_per_key: int, n_chunks: int):
+                target_rows_per_key: int):
     """Heavy hitters + their ts-quantile chunk boundaries from ONE
     deterministic row sample (VERDICT r2 #3; both outputs only affect
     LOAD BALANCE, never results — see _asof_union_salted — so sampling
@@ -236,68 +294,41 @@ def _hot_bounds(unioned: DataFrame, keys: list[str], ord_col: Column,
     + percentile pass); per-key percentile sketches — the expensive
     state — are still built only for hot keys' sampled rows. With
     sample_mod == 1 (tiny targets, tests) this degrades to the exact
-    two-pass form without persisting the full projection."""
+    two-pass form without persisting the full projection.
+
+    The chunk count comes from the same counts: enough chunks that the
+    hottest key's chunks hold about target_rows_per_key rows each, at
+    least 2 and at most one per shuffle partition. Every hot key gets
+    n_chunks - 1 boundaries."""
     from pyspark import StorageLevel
 
     sample_mod = min(64, max(1, target_rows_per_key // 64))
+    proj = _hot_sample(unioned, sample_mod).select(*keys, ord_col.alias("_o"))
     persisted = None
-    src = unioned
-    if sample_mod > 1:
-        # hash-based (not rand()): stable under task retries. Hash ALL
-        # columns, not just (keys, ts): with (keys, ts) alone every row
-        # sharing a timestamp samples all-or-nothing, and a hot key with
-        # few DISTINCT timestamps (coarse ts, heavy duplication) evades
-        # detection with non-trivial probability — e.g. 100 distinct ts
-        # at 1/64 each -> (63/64)^100 ~ 21% miss. Payload columns break
-        # the correlation for all but byte-identical duplicate rows.
-        # MapType has no hash in Spark (even nested inside a struct or
-        # array) — exclude unhashable payload columns (keys+ts are
-        # always hashable, so the sample stays well-defined; only the
-        # duplicate-row correlation guard weakens for rows identical in
-        # every hashable column)
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
-        def _has_map(dt) -> bool:
-            if isinstance(dt, MapType):
-                return True
-            if isinstance(dt, ArrayType):
-                return _has_map(dt.elementType)
-            if isinstance(dt, StructType):
-                return any(_has_map(f.dataType) for f in dt.fields)
-            return False
-
-        hashable = [f.name for f in unioned.schema.fields
-                    if not _has_map(f.dataType)]
-        samp_cond = F.pmod(
-            F.xxhash64(*[F.col(c) for c in hashable],
-                       F.lit("hotstats")),
-            F.lit(sample_mod),
-        ) == 0
-        src = unioned.filter(samp_cond)
-    proj = src.select(*keys, ord_col.alias("_o"))
     if sample_mod > 1:
         persisted = proj.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        hot_keys = (
+        counts = (
             proj.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") * sample_mod > target_rows_per_key)
-            .select(*keys)
         )
-        hot_key_rows = hot_keys.collect()
+        hot_rows = counts.collect()
+        if not hot_rows:
+            return [], None
+        spark = proj.sparkSession
+        hottest = max(r["_n"] for r in hot_rows) * sample_mod
+        n_chunks = max(2, min(math.ceil(hottest / target_rows_per_key),
+                              shuffle_parts(spark)))
         fracs = [i / n_chunks for i in range(1, n_chunks)]
+        hot_keys = spark.createDataFrame(hot_rows, schema=counts.schema) \
+            .select(*keys)
         stats = (
-            proj.join(F.broadcast(
-                proj.sparkSession.createDataFrame(hot_key_rows,
-                                                  schema=hot_keys.schema)
-                if hot_key_rows else hot_keys
-            ), keys, "left_semi")
+            proj.join(F.broadcast(hot_keys), keys, "left_semi")
             .groupBy(*keys)
             .agg(F.percentile_approx("_o", fracs, 10_000).alias(_BNDS))
             .select(*keys, _BNDS)
         )
-        if not hot_key_rows:
-            return [], stats.schema
         return stats.collect(), stats.schema
     finally:
         if persisted is not None:
@@ -325,7 +356,6 @@ def _asof_union_salted(
     payload: list[str],
     strict: bool,
     target_rows_per_key: int = 1_000_000,
-    n_chunks: int = 32,
 ) -> DataFrame:
     """The union strategy with a hot-key story (reference replica/split
     idea: ExtraStaticSearcher.h:735-753, ExtraDynamicSearcher.h:637-894).
@@ -334,7 +364,8 @@ def _asof_union_salted(
     10^9 versions pins one reducer, and AQE's skew split does not apply
     to Window exchanges. Here a cheap stats pass finds keys whose
     combined probe+data row count exceeds target_rows_per_key and learns
-    ~n_chunks approximate ts-quantile boundaries per hot key; every row
+    n_chunks - 1 approximate ts-quantile boundaries per hot key (n_chunks
+    derived from the hottest key's count, see _hot_bounds); every row
     then carries a chunk id = #(boundaries < ts), and the running-last
     window partitions on (keys..., chunk) — the hot key's timeline fans
     out over n_chunks reducers.
@@ -352,8 +383,6 @@ def _asof_union_salted(
     Cold keys flow through the same plan with chunk 0 (the hot-key map
     is a broadcast join, no per-row when-chain).
     """
-    if n_chunks < 2:
-        raise ValueError("salted asof needs n_chunks >= 2")
     probe_cols = list(probe.columns)
     spark = probe.sparkSession
     unioned = _tagged_union(probe, data, keys, probe_ts, data_ts, payload)
@@ -361,16 +390,15 @@ def _asof_union_salted(
 
     # stats pass: heavy hitters + their ts-quantile chunk boundaries.
     hot_rows, hot_schema = _hot_bounds(
-        unioned, keys, ord_u, target_rows_per_key, n_chunks
+        unioned, keys, ord_u, target_rows_per_key
     )
     if not hot_rows:
         return _asof_union(probe, data, keys, probe_ts, data_ts, payload,
                            strict)
     hot = spark.createDataFrame(hot_rows, schema=hot_schema)
-    chunk_of = _chunk_expr
 
     u = unioned.join(F.broadcast(hot), keys, "left") \
-        .withColumn(_CHUNK, chunk_of(ord_u)).drop(_BNDS)
+        .withColumn(_CHUNK, _chunk_expr(ord_u)).drop(_BNDS)
 
     # pass 1: running last WITHIN (key, chunk) — the big (and only big)
     # shuffle, now fanned out across chunks for hot keys.
@@ -392,7 +420,7 @@ def _asof_union_salted(
     pay_struct, _ = _pay_struct(data, data_ts, payload)
     ord_d = _ts_ordinal(F.col(data_ts), data.schema[data_ts].dataType)
     d_hot = data.join(F.broadcast(hot), keys) \
-        .withColumn(_CHUNK, chunk_of(ord_d))
+        .withColumn(_CHUNK, _chunk_expr(ord_d))
     per_chunk = d_hot.groupBy(*keys, _CHUNK).agg(
         F.max_by(pay_struct, F.col(data_ts)).alias("_cp")
     )
@@ -431,13 +459,17 @@ def _asof_broadcast(
     data_ts: str,
     payload: list[str],
     strict: bool,
-    tolerance_seconds: float | None,
 ) -> DataFrame:
-    """Broadcast the (small) probe side; the big data scan never shuffles.
+    """Hash join: LEFT OUTER equi-join on the keys with ts <= asof_ts as
+    the join condition, then row_number() top-1 per probe row.
 
-    Mirrors the reference's broadcast-centroid assignment join
-    (VectorIndex.cpp:1144-1254): small side replicated to every task, big
-    side streamed once.
+    The probe side is preserved, so Spark cannot build its hash table
+    from it: the data side is built — ``BroadcastHashJoin LeftOuter,
+    BuildRight`` when it fits under autoBroadcastJoinThreshold (the
+    reference's broadcast-centroid assignment join, VectorIndex.cpp:
+    1144-1254: small side replicated to every task), a sort-merge join
+    that shuffles it otherwise. The probe side streams; the top-1 window
+    shuffles only the join output.
     """
     # Unique per-row id BEFORE the join: the top-1 window partitions on it,
     # so duplicate probe rows each keep their own match (partitioning on
@@ -448,12 +480,7 @@ def _asof_broadcast(
     cond = _ts_cond(F.col(f"p.{probe_ts}"), F.col(f"d.{data_ts}"), strict)
     for k in keys:
         cond = cond & (F.col(f"p.{k}") == F.col(f"d.{k}"))
-    if tolerance_seconds is not None:
-        cond = cond & (
-            F.col(f"d.{data_ts}").cast("double")
-            >= F.col(f"p.{probe_ts}").cast("double") - float(tolerance_seconds)
-        )
-    joined = F.broadcast(p).join(d, cond, "left")
+    joined = p.join(d, cond, "left")
     w = Window.partitionBy(F.col(f"p.{uid}")).orderBy(
         F.col(f"d.{data_ts}").desc_nulls_last()
     )
@@ -462,99 +489,4 @@ def _asof_broadcast(
         *[F.col(f"p.{c}").alias(c) for c in probe.columns],
         F.col(f"d.{data_ts}").alias("matched_ts"),
         *[F.col(f"d.{c}").alias(c) for c in payload],
-    )
-
-
-def _asof_merge(
-    probe: DataFrame,
-    data: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    data_ts: str,
-    payload: list[str],
-    strict: bool,
-    tolerance_seconds: float | None,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Cogrouped Arrow sort-merge: pandas.merge_asof per HASH BUCKET of
-    keys (not per key — thousands of tiny cogroups would pay per-group
-    Arrow overhead; merge_asof's `by=` handles the per-key discipline
-    inside one vectorized call per bucket).
-
-    Both sides shuffle once on the bucket; within each cogroup the merge
-    is numpy searchsorted (no per-row Python).
-    """
-    import pandas as pd
-
-    fields = [StructField(c, probe.schema[c].dataType, True) for c in probe.columns]
-    fields.append(StructField("matched_ts", data.schema[data_ts].dataType, True))
-    fields += [StructField(c, data.schema[c].dataType, True) for c in payload]
-    out_schema = StructType(fields)
-
-    probe_cols = list(probe.columns)
-    allow_exact = not strict
-    # `is not None`, not truthiness: tolerance_seconds=0 is a real bound
-    # (match only rows at exactly the probe timestamp), not "no tolerance".
-    ts_is_datetime = isinstance(
-        probe.schema[probe_ts].dataType, (TimestampType, TimestampNTZType)
-    )
-    if tolerance_seconds is None:
-        tol = None
-    elif ts_is_datetime:
-        tol = pd.Timedelta(seconds=tolerance_seconds)
-    else:  # numeric (epoch) timestamps: tolerance in the same units
-        tol = tolerance_seconds
-    bcol = "__asof_bucket"
-    p_b = probe.withColumn(
-        bcol, F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
-    )
-    # Prefix every data-side column: with same-named columns on both
-    # cogroup sides, Spark's column pruning resolves downstream column
-    # requirements BY NAME and silently prunes the data side's copies
-    # (observed on Spark 4: dk arrived without its key/ts columns when the
-    # consumer only referenced the output's probe-named columns).
-    dpfx = "__asof_d_"
-    d_sel = [F.col(k).alias(dpfx + k) for k in keys] + [
-        F.col(data_ts).alias(dpfx + data_ts)
-    ] + [F.col(c).alias(dpfx + c) for c in payload]
-    d_b = data.select(*d_sel).withColumn(
-        bcol,
-        F.pmod(F.xxhash64(*[dpfx + k for k in keys]), F.lit(n_buckets))
-        .cast("int"),
-    )
-
-    def merge(pk: "pd.DataFrame", dk: "pd.DataFrame") -> "pd.DataFrame":
-        if pk.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        left = pk.sort_values(probe_ts, kind="mergesort")
-        if dk.empty:
-            out = left.copy()
-            # NA typed to the ts column: NaT only for datetimes — a
-            # hardcoded NaT breaks Arrow conversion when timestamps are
-            # epoch numbers.
-            out["matched_ts"] = pd.NaT if ts_is_datetime else None
-            for c in payload:
-                out[c] = None
-            return out[probe_cols + ["matched_ts"] + payload]
-        right = dk[[dpfx + c for c in keys + [data_ts] + payload]].rename(
-            columns={dpfx + data_ts: "matched_ts",
-                     **{dpfx + k: k for k in keys},
-                     **{dpfx + c: c for c in payload}}
-        )
-        right = right.sort_values("matched_ts", kind="mergesort")
-        merged = pd.merge_asof(
-            left,
-            right,
-            left_on=probe_ts,
-            right_on="matched_ts",
-            by=keys,
-            allow_exact_matches=allow_exact,
-            tolerance=tol,
-        )
-        return merged[probe_cols + ["matched_ts"] + payload]
-
-    return (
-        p_b.groupBy(bcol)
-        .cogroup(d_b.groupBy(bcol))
-        .applyInPandas(merge, schema=out_schema)
     )

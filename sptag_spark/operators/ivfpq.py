@@ -447,7 +447,7 @@ def _adc_partials_cogrouped(
     ])
     arrow_out = to_arrow_schema(out_schema)
     # cogroup sides must not share data-column names (Spark 4 prunes
-    # by name under narrow consumers — see asof._asof_merge), and the
+    # by name under narrow consumers — see knn's __pb_ prefixing), and the
     # grouping keys MUST share a dtype: the postings' partition column
     # is directory-inferred (int), the probe frame carries centroid_id
     # (long) — misaligned key types silently fail to cogroup

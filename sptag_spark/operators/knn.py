@@ -1814,7 +1814,7 @@ def _exact_partials_cogrouped(
     arrow_out = to_arrow_schema(out_schema)
     # key dtypes must match across cogroup sides (partition column is
     # directory-inferred int, centroid_id is long); data-column names
-    # must not collide (asof._asof_merge rule)
+    # must not collide (Spark 4 prunes same-named cogroup columns by name)
     probe_q = probes.join(q_raw, "query_id").select(
         F.col("bucket").cast(post_kern.schema["bucket"].dataType)
         .alias("__pb_bucket"), "query_id", "__qe")

@@ -7,8 +7,8 @@ merges underflowing postings (ExtraDynamicSearcher.h:895-1146). Spark
 equivalents:
 
 - write_range_sorted: repartitionByRange(key, ts) +
-  sortWithinPartitions — the exact range-partition + local-sort idiom the
-  as-of merge strategy and Parquet min/max (zone-map) pruning want. Emits
+  sortWithinPartitions — the exact range-partition + local-sort idiom a
+  per-key as-of scan and Parquet min/max (zone-map) pruning want. Emits
   a per-output lineage record (rows, min/max ts, digest).
 - compact_small_files: read + repartition to target file count + rewrite
   (Iceberg rewrite_data_files stand-in; reference merge T5).

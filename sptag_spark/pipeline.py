@@ -72,7 +72,6 @@ def run_pipeline(
     sequences_path: str,
     probes_path: str | None = None,
     out_path: str | None = None,
-    asof_strategy: str = "union",
 ) -> dict:
     """End-to-end run; returns throughput metrics."""
     t0 = time.time()
@@ -80,7 +79,7 @@ def run_pipeline(
     feats = featurize(seqs)
     if probes_path:
         probes = spark.read.parquet(probes_path)
-        result = serve_asof(feats, probes, strategy=asof_strategy)
+        result = serve_asof(feats, probes)
     else:
         result = feats
     if out_path:

@@ -1,6 +1,7 @@
-"""As-of join: all three strategies vs the DuckDB ASOF JOIN oracle, plus
-zero-temporal-leakage invariants (reference analog: version predicate
-ExtraDynamicSearcher.h:680; leakage probe per FIXTURES.md T5)."""
+"""As-of join: every strategy vs the DuckDB ASOF JOIN oracle (plain,
+strict, tolerance, NULL keys), plus zero-temporal-leakage invariants
+(reference analog: version predicate ExtraDynamicSearcher.h:680; leakage
+probe per FIXTURES.md T5)."""
 
 from __future__ import annotations
 
@@ -10,13 +11,13 @@ from pyspark.sql import functions as F
 from sptag_spark.operators.asof import asof_join
 from tests.util import assert_df_equal
 
-STRATEGIES = ["union", "broadcast", "merge", "salted"]
+STRATEGIES = ["union", "broadcast", "salted"]
 
 
 def _kw(strategy):
-    """Force real chunking for the salted strategy on the small fixture."""
-    extra = {"target_rows_per_key": 50, "n_chunks": 8} \
-        if strategy == "salted" else {}
+    """Force real chunking for the salted strategy on the small fixture
+    (sf0.001 users hold up to 32 click+purchase rows)."""
+    extra = {"target_rows_per_key": 8} if strategy == "salted" else {}
     return dict(strategy=strategy, **extra)
 
 
@@ -94,7 +95,7 @@ def test_asof_strategies_agree_on_ties(spark):
     results = []
     for s in STRATEGIES:
         r = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
-                      strategy=s).toPandas()
+                      **_kw(s)).toPandas()
         r = r.sort_values(["k", "ts"]).reset_index(drop=True)
         results.append(r)
     assert list(results[0]["v"].fillna(-1)) == [-1.0, 10.0, 20.0, 50.0, -1.0]
@@ -125,14 +126,15 @@ def test_broadcast_keeps_duplicate_probe_rows(spark):
         [(1, t0), (1, t0)], ["k", "ts"])  # exact duplicates
     data = spark.createDataFrame(
         [(1, t0 - dt.timedelta(seconds=5), 42.0)], ["k", "ts", "v"])
-    for strat in ("union", "broadcast", "merge"):
+    for strat in STRATEGIES:
         out = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
-                        payload=["v"], strategy=strat).collect()
+                        payload=["v"], **_kw(strat)).collect()
         assert len(out) == 2, strat
         assert all(r["v"] == 42.0 for r in out), strat
 
 
-def test_merge_tolerance_zero_means_exact_match_only(spark):
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_tolerance_zero_means_exact_match_only(spark, strategy):
     """tolerance_seconds=0 is a real bound (exact-timestamp matches only),
     not 'no tolerance' — regression for the truthiness bug."""
     import datetime as dt
@@ -144,28 +146,115 @@ def test_merge_tolerance_zero_means_exact_match_only(spark):
         [(1, t0, 1.0), (2, t0, 2.0)], ["k", "ts", "v"])
     out = {r["k"]: r for r in asof_join(
         probe, data, on="k", probe_ts="ts", data_ts="ts", payload=["v"],
-        strategy="merge", tolerance_seconds=0).collect()}
+        tolerance_seconds=0, **_kw(strategy)).collect()}
     assert out[1]["v"] == 1.0          # exact-ts match survives tol=0
     assert out[2]["v"] is None         # 10s-stale match rejected
+    assert out[2]["matched_ts"] is None
 
 
-def test_merge_numeric_epoch_timestamps(spark):
-    """Numeric (epoch-seconds) ts columns work through the merge path,
-    including the empty-data-bucket branch (NaT would break Arrow)."""
+@pytest.mark.parametrize("strict", [False, True])
+@pytest.mark.parametrize("strategy", [*STRATEGIES, "auto"])
+def test_tolerance_numeric_epoch_timestamps(spark, strategy, strict):
+    """Numeric (epoch-seconds) ts columns take the tolerance in their own
+    units, strict or not, and an empty data side yields all-null matches."""
     probe = spark.createDataFrame(
         [(1, 100.0), (2, 250.0)], ["k", "ts"])
     data = spark.createDataFrame(
-        [(1, 90.0, 7.0)], ["k", "ts", "v"])
+        [(1, 90.0, 7.0), (1, 100.0, 8.0), (2, 200.0, 9.0)], ["k", "ts", "v"])
     out = {r["k"]: r for r in asof_join(
         probe, data, on="k", probe_ts="ts", data_ts="ts", payload=["v"],
-        strategy="merge", tolerance_seconds=30).collect()}
-    assert out[1]["v"] == 7.0 and out[1]["matched_ts"] == 90.0
-    assert out[2]["v"] is None
-    # empty data side entirely: every bucket takes the dk.empty branch
+        strict=strict, tolerance_seconds=30, **_kw(strategy)).collect()}
+    want = (7.0, 90.0) if strict else (8.0, 100.0)
+    assert (out[1]["v"], out[1]["matched_ts"]) == want
+    assert out[2]["v"] is None and out[2]["matched_ts"] is None  # 50 > 30
     empty = data.filter("k < 0")
     out2 = asof_join(probe, empty, on="k", probe_ts="ts", data_ts="ts",
-                     payload=["v"], strategy="merge").collect()
+                     payload=["v"], tolerance_seconds=30,
+                     **_kw(strategy)).collect()
     assert len(out2) == 2 and all(r["v"] is None for r in out2)
+
+
+# The match is the latest row <= ts, so "within tolerance" is a null-out
+# of too-stale matches (the contract's asof_join_tolerance_1h oracle).
+TOL_ORACLE = """
+WITH m AS ({asof})
+SELECT event_id, user_id, ts,
+  CASE WHEN matched_ts >= ts - INTERVAL 1 HOUR THEN matched_ts END AS matched_ts,
+  CASE WHEN matched_ts >= ts - INTERVAL 1 HOUR THEN click_value END AS click_value,
+  CASE WHEN matched_ts >= ts - INTERVAL 1 HOUR THEN click_event_id END
+    AS click_event_id
+FROM m
+"""
+
+
+@pytest.mark.parametrize("strict", [False, True])
+@pytest.mark.parametrize("strategy", [*STRATEGIES, "auto"])
+def test_tolerance_1h_matches_duckdb(spark, ddb, strategy, strict):
+    probe, data = _probe_data(spark)
+    got = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
+                    strict=strict, tolerance_seconds=3600, **_kw(strategy))
+    want = ddb.sql(TOL_ORACLE.format(
+        asof=ORACLE.format(op=">" if strict else ">="))).df()
+    assert want["matched_ts"].notna().any()   # some matches survive 1h
+    assert (want["matched_ts"].isna().sum()
+            > ddb.sql(ORACLE.format(op=">=")).df()["matched_ts"].isna().sum())
+    assert_df_equal(got, want)
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_null_keys_never_match_duckdb(spark, ddb, strategy):
+    """NULL join keys are null-intolerant on both sides: a NULL-key probe
+    gets no match and a NULL-key data row matches nothing, as in DuckDB's
+    ASOF LEFT JOIN. Every key holds more than the salted plan's target of
+    8 rows, so its chunked path runs too."""
+    import datetime as dt
+
+    import pandas as pd
+
+    t0 = dt.datetime(2025, 1, 1)
+    keys = [None, 1, 2]
+    probe_rows = [(i, keys[i % 3], t0 + dt.timedelta(minutes=i))
+                  for i in range(120)]
+    data_rows = [(keys[j % 3], t0 + dt.timedelta(minutes=2 * j, seconds=-30),
+                  float(j)) for j in range(60)]
+    probe = spark.createDataFrame(probe_rows, "qid long, k long, ts timestamp")
+    data = spark.createDataFrame(data_rows, "k long, ts timestamp, v double")
+    got = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
+                    payload=["v"], **_kw(strategy))
+    ddb.register("null_p", pd.DataFrame(probe_rows, columns=["qid", "k", "ts"])
+                 .astype({"k": "Int64"}))
+    ddb.register("null_d", pd.DataFrame(data_rows, columns=["k", "ts", "v"])
+                 .astype({"k": "Int64"}))
+    want = ddb.sql("""
+        SELECT p.qid, p.k, p.ts, d.ts AS matched_ts, d.v
+        FROM null_p p ASOF LEFT JOIN null_d d
+        ON p.k = d.k AND p.ts >= d.ts""").df()
+    assert want.loc[want["k"].isna(), "v"].isna().all()
+    assert_df_equal(got, want)
+
+
+def test_auto_reads_parsed_broadcast_threshold(spark):
+    """auto compares the probe size with Spark's parsed
+    autoBroadcastJoinThreshold: under "1KB" an sf0.001 purchase probe is
+    too big, so auto plans the union route (no join at all)."""
+    probe, data = _probe_data(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1KB")
+    try:
+        got = asof_join(probe, data, on="user_id", probe_ts="ts",
+                        data_ts="ts", strategy="auto")
+        plan = got._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "Join" not in plan and "Union" in plan, plan
+
+
+def test_unknown_strategy_raises(spark):
+    probe, data = _probe_data(spark)
+    with pytest.raises(ValueError, match="unknown asof strategy"):
+        asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
+                  strategy="merge")
 
 
 def _hot_key_frames(spark):
@@ -198,7 +287,7 @@ def test_salted_equals_union_on_hot_keys(spark, strict):
     base = asof_join(probe, clicks, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     salt = asof_join(probe, clicks, strategy="salted",
-                     target_rows_per_key=50, n_chunks=8, **kw).toPandas() \
+                     target_rows_per_key=50, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     assert base.equals(salt)
 
@@ -215,7 +304,7 @@ def test_salted_with_map_payload_column(spark):
     base = asof_join(probe, clicks, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     salt = asof_join(probe, clicks, strategy="salted",
-                     target_rows_per_key=128, n_chunks=8, **kw).toPandas() \
+                     target_rows_per_key=128, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     assert base.equals(salt)
 
@@ -246,7 +335,7 @@ def test_salted_carry_across_empty_chunks(spark):
     d = spark.createDataFrame(data, ["k", "ts", "v"])
     out = asof_join(probe, d, on="k", probe_ts="ts", data_ts="ts",
                     payload=["v"], strategy="salted",
-                    target_rows_per_key=50, n_chunks=8).collect()
+                    target_rows_per_key=50).collect()
     assert len(out) == 300
     for r in out:
         want = 43.0 if r["ts"] >= t0 + dt.timedelta(hours=150) else 42.0
@@ -269,8 +358,8 @@ def test_null_ts_data_rows_never_match(spark):
     for strat in STRATEGIES:
         out = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
                         payload=["v"], **(
-                            dict(strategy=strat, target_rows_per_key=50,
-                                 n_chunks=4) if strat == "salted"
+                            dict(strategy=strat, target_rows_per_key=50)
+                            if strat == "salted"
                             else dict(strategy=strat))).collect()
         assert all(r["v"] == 1.0 for r in out), strat
         assert all(r["matched_ts"] is not None for r in out), strat
@@ -298,19 +387,27 @@ def test_salted_sampled_stats_path_equals_union(spark):
     base = asof_join(probe, d, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     salted = asof_join(probe, d, strategy="salted",
-                       target_rows_per_key=4096, n_chunks=8, **kw)
+                       target_rows_per_key=4096, **kw)
     got = salted.toPandas().sort_values("event_id").reset_index(drop=True)
     assert base.equals(got)
-    # the sampled detector must flag exactly the hot key (and give it
-    # n_chunks-1 boundaries), never the 100-row cold keys
+    # the sampled detector must flag exactly the hot key, never the
+    # 100-row cold keys, and give it n_chunks - 1 boundaries with
+    # n_chunks = ceil(sampled rows * sample_mod / target), clamped to
+    # [2, shuffle partitions]
+    import math
+
     from pyspark.sql import functions as F
 
     from sptag_spark.operators.asof import (
-        _hot_bounds, _tagged_union, _ts_ordinal, _TS,
+        _hot_bounds, _hot_sample, _tagged_union, _ts_ordinal, _TS,
     )
+    from sptag_spark.session import shuffle_parts
     unioned = _tagged_union(probe, d, ["k"], "ts", "ts", ["v"])
     rows, _ = _hot_bounds(
         unioned, ["k"], _ts_ordinal(F.col(_TS), probe.schema["ts"].dataType),
-        4096, 8)
+        4096)
     assert [r["k"] for r in rows] == [0]
-    assert len(rows[0]["__asof_bounds"]) == 7
+    sampled = _hot_sample(unioned, 64).filter("k = 0").count()
+    n_chunks = max(2, min(math.ceil(sampled * 64 / 4096), shuffle_parts(spark)))
+    assert 2 < n_chunks < 8       # ~12k rows at a 4096 target
+    assert len(rows[0]["__asof_bounds"]) == n_chunks - 1

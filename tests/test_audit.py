@@ -23,7 +23,7 @@ def _served(spark, strategy):
                      data_ts="ts", strategy=strategy)
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "merge"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "salted"])
 def test_every_strategy_is_leak_free(spark, strategy):
     rep = assert_no_leakage(_served(spark, strategy), probe_ts="ts")
     assert rep["violations"] == 0

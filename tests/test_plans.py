@@ -49,7 +49,10 @@ def test_column_pruning_reaches_scan(events):
     assert "value" not in p.split("ReadSchema")[1].splitlines()[0]
 
 
-def test_asof_broadcast_strategy_broadcasts_probe(events):
+def test_asof_broadcast_strategy_builds_data_side_without_shuffle(events):
+    """The hash-join plan keeps the probe side (LEFT OUTER), so Spark
+    hash-builds the data side: BroadcastHashJoin LeftOuter, BuildRight,
+    with no hash Exchange of the data scan before the join."""
     from sptag_spark.operators.asof import asof_join
 
     probe = events.filter("event_type='purchase'") \
@@ -59,8 +62,7 @@ def test_asof_broadcast_strategy_broadcasts_probe(events):
     df = asof_join(probe, clicks, on="user_id", probe_ts="ts",
                    data_ts="ts", strategy="broadcast")
     p = plan_of(df)
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
-    # the big (data) side must NOT hash-repartition before the join
+    assert "BroadcastHashJoin LeftOuter BuildRight" in p, p
     pre_join = p.split("Join")[0]
     assert "Exchange hashpartitioning" not in pre_join
 
@@ -207,18 +209,27 @@ def test_salted_asof_fans_hot_key_across_chunks(spark, events):
         "user_id", "ts", F.col("value").alias("click_value"))
     out = asof_join(probe, clicks, on="user_id", probe_ts="ts",
                     data_ts="ts", strategy="salted",
-                    target_rows_per_key=50, n_chunks=8)
+                    target_rows_per_key=50)
     p = plan_of(out)
     assert re.search(r"hashpartitioning\([^)]*__asof_chunk", p), \
         "window exchange must include the chunk column"
 
     # runtime fan-out: the hot key's rows span several chunks and no
-    # chunk owns a majority
+    # chunk owns a majority. Target 16 rows per key: the hot key's ~80
+    # rows derive n_chunks = ceil(rows / 16), clamped to [2, partitions]
+    import math
+
+    from sptag_spark.session import shuffle_parts
+
     u = _tagged_union(probe, clicks, ["user_id"], "ts", "ts",
                       ["click_value"])
     ordc = _ts_ordinal(F.col(_TS), probe.schema["ts"].dataType)
-    rows, schema = _hot_bounds(u, ["user_id"], ordc, 50, 8)
-    assert any(r["user_id"] == 0 for r in rows), "hot key not detected"
+    rows, schema = _hot_bounds(u, ["user_id"], ordc, 16)
+    hot0 = [r for r in rows if r["user_id"] == 0]
+    assert hot0, "hot key not detected"
+    n_hot = u.filter("user_id = 0").count()
+    n_chunks = max(2, min(math.ceil(n_hot / 16), shuffle_parts(spark)))
+    assert len(hot0[0]["__asof_bounds"]) == n_chunks - 1
     hot = spark.createDataFrame(rows, schema)
     per_chunk = (
         u.join(F.broadcast(hot), "user_id")

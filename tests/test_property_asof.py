@@ -47,9 +47,11 @@ def test_asof_strategies_agree_and_match_pandas(spark, probe_map, data_map):
         .withColumnRenamed("event_id", "d_id")
 
     outs = {}
-    for strat in ("union", "broadcast", "merge"):
+    # target_rows_per_key=4 makes the salted plan chunk most keys
+    for strat, kw in (("union", {}), ("broadcast", {}),
+                      ("salted", {"target_rows_per_key": 4})):
         got = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
-                        payload=["v"], strategy=strat).toPandas()
+                        payload=["v"], strategy=strat, **kw).toPandas()
         outs[strat] = got.sort_values(["event_id"]).reset_index(drop=True)
 
     # pandas oracle (ties: merge_asof takes the LAST of equal ts, matching
@@ -100,13 +102,13 @@ unique_key_events = st.dictionaries(
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(probe_map=key_events, data_map=unique_key_events,
-       target=st.integers(2, 30), n_chunks=st.integers(2, 6))
+       target=st.integers(2, 30))
 def test_salted_asof_equals_union_on_random_data(spark, probe_map, data_map,
-                                                 target, n_chunks):
-    """Random inputs + random hot-key thresholds/chunk counts: the salted
-    strategy must be row-identical to the plain union plan. Data offsets
-    are unique per key so no (key, ts) tie can make either engine's pick
-    ambiguous."""
+                                                 target):
+    """Random inputs + random hot-key thresholds (and so derived chunk
+    counts): the salted strategy must be row-identical to the plain union
+    plan. Data offsets are unique per key so no (key, ts) tie can make
+    either engine's pick ambiguous."""
     probe_rows = _mk_events(probe_map)
     data_rows = _mk_events(data_map)
     probe = spark.createDataFrame(probe_rows, ["event_id", "k", "ts", "v"]) \
@@ -117,7 +119,6 @@ def test_salted_asof_equals_union_on_random_data(spark, probe_map, data_map,
     base = asof_join(probe, data, strategy="union", **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     salt = asof_join(probe, data, strategy="salted",
-                     target_rows_per_key=target, n_chunks=n_chunks,
-                     **kw).toPandas() \
+                     target_rows_per_key=target, **kw).toPandas() \
         .sort_values("event_id").reset_index(drop=True)
     assert base.equals(salt)

@@ -7,6 +7,8 @@ Exact equality for ints/strings/timestamps; flags float columns that are
 not bit-identical with the max abs diff so hash-risk is visible BEFORE
 the driver runs.
 
+A query without an oracle in ``oracle_sql()`` counts as a failure.
+
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
 
@@ -60,16 +62,16 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            print(f"FAIL  {name}: no oracle in oracle_sql()")
+            n_fail += 1
+            continue
         t0 = time.time()
         try:
             got = canon(fn(spark, sf_dir).toPandas())
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"weak  {name}: rows={len(got)} (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
             continue
         want = canon(con.sql(oracles[name]).df())
         problems = []

@@ -139,9 +139,12 @@ def main() -> int:
         ),
         (
             "As-of join (broadcast strategy)",
-            "BroadcastNestedLoopJoin with the PROBE side broadcast — the "
-            "big data scan never shuffles; top-1 window runs per probe "
-            "row. Use when probes << data (feature lookup batches).",
+            "A LEFT OUTER hash join on user_id with ts <= asof_ts in the "
+            "join condition: Spark builds the data side (BroadcastHashJoin "
+            "LeftOuter, BuildRight when it fits under the broadcast "
+            "threshold, a sort-merge join otherwise), the probe side "
+            "streams, and the top-1 window shuffles only the join output. "
+            "Use when probes << data (feature lookup batches).",
             asof_join(probe.limit(100), clicks, on="user_id",
                       probe_ts="ts", data_ts="ts", strategy="broadcast"),
         ),
@@ -193,7 +196,7 @@ def main() -> int:
                 ).filter("event_type='click'").select(
                     "user_id", "ts", F.col("value").alias("click_value")),
                 on="user_id", probe_ts="ts", data_ts="ts",
-                strategy="salted", target_rows_per_key=50, n_chunks=8),
+                strategy="salted", target_rows_per_key=50),
         ),
         (
             "IVF probe over the persisted index",
